@@ -7,6 +7,7 @@ theta=0.1, delta=0.01, epsilon=1.01, const=10.0, iteration=3 (test.py:127 uses 1
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -29,6 +30,23 @@ class ParisConfig:
     # buckets sized from the largest hot product); 1 = off (plain join);
     # >1 = fixed bucket count with the frequency-threshold hot sketch
     salt_buckets: int = 0
+
+
+def _env_flag(name: str) -> bool:
+    """True when env var ``name`` is set to 1/true/yes/on (any case)."""
+    return os.environ.get(name, "").strip().lower() in ("1", "true", "yes", "on")
+
+
+def _local_slots(master: str) -> int | None:
+    """Task slots of a ``local[N]`` / ``local[N,F]`` / ``local[*]`` /
+    ``local`` master; None for cluster masters."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\s*\d+)?\])?", master.strip())
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return (os.cpu_count() or 1) if n == "*" else int(n)
 
 
 def get_spark(
@@ -90,8 +108,9 @@ def get_spark(
     # the session (measured: a 3 s throwaway shuffle at init takes the
     # first real query from ~12 s to ~9 s at sf0.1). Touches no user data
     # and computes nothing any query reuses. PRASE_NO_SESSION_WARMUP=1
-    # skips it (e.g. for micro-benchmarks of cold-start itself).
-    if not os.environ.get("PRASE_NO_SESSION_WARMUP") and not getattr(
+    # (or true/yes/on) skips it, e.g. for micro-benchmarks of cold-start
+    # itself; unset, empty, 0 or false keep it.
+    if not _env_flag("PRASE_NO_SESSION_WARMUP") and not getattr(
         session, "_prase_warmed", False
     ):
         (
@@ -105,9 +124,11 @@ def get_spark(
         # same way: the first mapInPandas in a session otherwise pays
         # daemon fork + worker spawn per core inside the query that runs
         # it (~0.5-1 s at local[32] measured on the extraction path).
-        # Identity over `cpus` one-row partitions touches every slot.
+        # Identity over one one-row partition per slot of the resolved
+        # master touches every slot.
+        slots = _local_slots(master) or cpus
         (
-            session.range(cpus, numPartitions=cpus)
+            session.range(slots, numPartitions=slots)
             .mapInPandas(lambda it: it, "id bigint")
             .count()
         )

@@ -1,10 +1,16 @@
-"""Mutual-best bipartite matching + connected-components canonicalization.
+"""Mutual-best bipartite matching + canonicalization of the match graph.
 
 - bipartite_match: reference __ent_bipartite_matching (objects/KGs.py:222-241)
   re-expressed as one groupBy-argmax + one join-filter (no loops).
-- connected_components: NEW capability (SURVEY.md §4) — the reference only
-  ever aligns two KGs 1:1; web-scale mention canonicalization needs
-  transitive closure over the match graph.
+- canonical_entity_ids: collapses accepted (L, R) entity matches into
+  canonical ids. The match state is keyed by ent_id (the reference's
+  ``sub_ent_match[l_id] -> r_id``; PARIS argmax, seed max/force merge and
+  the embedding reset all keep one row per L entity), so every L node has
+  at most one edge and the match graph is a set of stars, one per matched
+  R node. Each star is labelled in one aggregate — no iteration.
+- connected_components: NEW capability (SURVEY.md §4) — transitive closure
+  over general equivalence graphs (dedup, similarity search, incremental
+  sameAs batches), where chains and cycles need iterative label rounds.
 """
 
 from __future__ import annotations
@@ -259,23 +265,45 @@ def canonical_entity_ids(
 ) -> DataFrame:
     """Collapse accepted match pairs into canonical cluster ids.
 
-    Builds the equivalence graph from entity matches with prob ≥ threshold
-    (L ids offset apart from R ids) and returns (side, ent_id, canonical_id).
+    Takes the entity matches with prob ≥ threshold as edges between L and R
+    nodes (ids offset apart: ``ent_id + l_offset`` / ``ent_id + r_offset``)
+    and returns (side, ent_id, canonical_id) for every matched node, where
+    canonical_id is the smallest offset node id of its cluster — the label
+    :func:`connected_components` gives on the same edges.
     NEW functionality beyond the reference's 1:1 state (SURVEY.md §4 item 3).
+
+    Precondition: the entity rows of ``matches_sub`` are unique by ent_id
+    (one counterpart per L entity), as every engine producer of the match
+    state guarantees. The graph is then a set of stars, one around each R
+    node, and a star's label is ``least(min(L endpoint), R endpoint)`` —
+    with the default offsets, the smallest L id matched to that R node.
+    One groupBy over R labels the stars and one join hands each L row its
+    star's label; the label table has at most one row per matched R node.
+    The filtered edges are pinned first because both steps read them, and
+    re-reading the lineage would recompute the whole upstream match state.
     """
-    pairs = matches_sub.filter((~F.col("is_lit")) & (F.col("prob") >= threshold))
-    edges = pairs.select(
-        (F.col("ent_id") + F.lit(l_offset)).alias("src"),
-        (F.col("counterpart_id") + F.lit(r_offset)).alias("dst"),
+    edges = (
+        matches_sub.filter((~F.col("is_lit")) & (F.col("prob") >= threshold))
+        .select(
+            (F.col("ent_id") + F.lit(l_offset)).alias("l"),
+            (F.col("counterpart_id") + F.lit(r_offset)).alias("r"),
+        )
+        .localCheckpoint()
     )
-    comp = connected_components(edges)
-    return comp.select(
-        F.when(F.col("node") >= r_offset, F.lit("R")).otherwise(F.lit("L")).alias("side"),
-        F.when(F.col("node") >= r_offset, F.col("node") - r_offset)
-        .otherwise(F.col("node") - l_offset)
-        .alias("ent_id"),
-        F.col("component").alias("canonical_id"),
+    stars = edges.groupBy("r").agg(
+        F.least(F.min("l"), F.col("r")).alias("canonical_id")
     )
+    r_rows = stars.select(
+        F.lit("R").alias("side"),
+        (F.col("r") - r_offset).alias("ent_id"),
+        "canonical_id",
+    )
+    l_rows = edges.join(stars, "r").select(
+        F.lit("L").alias("side"),
+        (F.col("l") - l_offset).alias("ent_id"),
+        "canonical_id",
+    )
+    return l_rows.unionByName(r_rows)
 
 
 def incremental_components(

@@ -83,13 +83,88 @@ def test_connected_components(spark):
 
 def test_canonical_entity_ids(spark):
     sub = spark.createDataFrame(
-        [(1, 101, 0.9, False), (2, 101, 0.8, False), (3, 103, 0.05, False)], MATCH_SCHEMA
+        [
+            (1, 101, 0.9, False),
+            (2, 101, 0.8, False),
+            (3, 103, 0.05, False),
+            (4, 104, 0.5, False),
+            (7, 107, 1.0, True),
+        ],
+        MATCH_SCHEMA,
     )
     got = canonical_entity_ids(sub, threshold=0.1).collect()
     by_key = {(r["side"], r["ent_id"]): r["canonical_id"] for r in got}
-    # 1 and 2 both ≥ θ on r101 -> same cluster; 3 below threshold -> absent
-    assert by_key[("L", 1)] == by_key[("L", 2)] == by_key[("R", 101)]
-    assert ("L", 3) not in by_key
+    # L1 and L2 both ≥ θ on R101 -> one star labelled by its smallest L id;
+    # the 1:1 pair takes its L id; below θ and literal rows are absent
+    assert by_key == {("L", 1): 1, ("L", 2): 1, ("R", 101): 1, ("L", 4): 4, ("R", 104): 4}
+    assert len(got) == len(by_key)
+
+    # offsets that put R ids below L ids: the R node labels its star
+    swapped = canonical_entity_ids(sub, threshold=0.1, l_offset=1 << 40, r_offset=0)
+    by_key = {(r["side"], r["ent_id"]): r["canonical_id"] for r in swapped.collect()}
+    assert by_key == {
+        ("L", 1): 101, ("L", 2): 101, ("R", 101): 101, ("L", 4): 104, ("R", 104): 104,
+    }
+
+
+def _assert_canonical_matches_components(matches_sub, theta):
+    """The star labelling relies on one entity row per ent_id; under that
+    precondition it must give exactly the connected-components labels."""
+    ents = matches_sub.filter(~F.col("is_lit"))
+    assert ents.count() > 0
+    assert ents.select("ent_id").distinct().count() == ents.count()
+    r_offset = 1 << 40
+    edges = ents.filter(F.col("prob") >= theta).select(
+        F.col("ent_id").alias("src"), (F.col("counterpart_id") + r_offset).alias("dst")
+    )
+    want = {
+        ("R", r["node"] - r_offset) if r["node"] >= r_offset else ("L", r["node"]): r["component"]
+        for r in connected_components(edges, method="hashmin").collect()
+    }
+    rows = canonical_entity_ids(matches_sub, theta, r_offset=r_offset).collect()
+    got = {(r["side"], r["ent_id"]): r["canonical_id"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == want
+
+
+def test_canonical_ids_equal_components_on_paris_state(spark):
+    from prase_spark.config import ParisConfig
+    from prase_spark.fixtures import two_kg_fixture
+    from prase_spark.pipeline import align
+
+    fx = two_kg_fixture(spark, n_ent=60, seed=42)
+    kg_l, kg_r = build_kg(fx["raw_l"]), build_kg(fx["raw_r"])
+    cfg = ParisConfig(iterations=2)
+    run = align(spark, kg_l, kg_r, cfg, checkpoint=False)
+    _assert_canonical_matches_components(run.state.matches_sub, cfg.theta)
+
+
+def test_canonical_ids_equal_components_on_lsh_reset_state(spark):
+    """The embedding reset argmax is many-to-one (several L entities can
+    pick one R entity), so its state has multi-L stars."""
+    from prase_spark.config import ParisConfig
+    from prase_spark.embed import resolve_embeddings
+    from prase_spark.fixtures import two_kg_fixture
+    from prase_spark.paris import init_state
+    from prase_spark.pipeline import prase_feedback_align
+
+    fx = two_kg_fixture(spark, n_ent=60, seed=42)
+    kg_l, kg_r = build_kg(fx["raw_l"]), build_kg(fx["raw_r"])
+    embs = [
+        resolve_embeddings(
+            spark.createDataFrame(fx[key], "name STRING, embedding ARRAY<FLOAT>"), kg.nodes
+        )
+        for key, kg in (("emb_l_names", kg_l), ("emb_r_names", kg_r))
+    ]
+    cfg = ParisConfig(iterations=0)
+    run = prase_feedback_align(
+        spark, kg_l, kg_r, cfg, embeddings_l=embs[0], embeddings_r=embs[1],
+        prior_state=init_state(spark, *literal_seed_matches(kg_l, kg_r)),
+        reset_from_embeddings=True, reset_use_lsh=True,
+    )
+    accepted = run.state.matches_sub.filter((~F.col("is_lit")) & (F.col("prob") >= cfg.theta))
+    assert accepted.groupBy("counterpart_id").count().filter("count > 1").count() > 0
+    _assert_canonical_matches_components(run.state.matches_sub, cfg.theta)
 
 
 def test_connected_components_nonconvergence_raises(spark):
